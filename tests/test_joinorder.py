@@ -176,12 +176,6 @@ def test_two_way_join_untouched():
     assert out is filt
 
 
-def test_env_kill_switch(monkeypatch):
-    monkeypatch.setenv("WVLET_SPARK_JOIN_REORDER", "0")
-    tree = _q5_tree()
-    assert reorder_joins(tree, SCHEMAS.get, _tpch_stats().get) is tree
-
-
 def test_q5_compiles_reordered_and_matches(ws, duck):
     """End-to-end: with broadcast disabled (so the test data's toy scale
     is costed like a shuffle-bound cluster), the session compiles Q5 with
@@ -280,14 +274,11 @@ order by n_name
 ]
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+def test_reorder_on_off_equivalence(ws, duck):
+    """The reordered Spark result matches the DuckDB oracle, which runs
+    the joins in written order."""
+    from wvlet_spark.oracle import compare
 
-
-def test_reorder_on_off_equivalence(ws, monkeypatch):
     for q in EQUIV_QUERIES:
-        monkeypatch.setenv("WVLET_SPARK_JOIN_REORDER", "0")
-        off = _rows(ws.run(q))
-        monkeypatch.setenv("WVLET_SPARK_JOIN_REORDER", "1")
-        on = _rows(ws.run(q))
-        assert on == off, f"row sets differ for:\n{q}"
+        good, msg = compare(ws.run(q), duck, ws.oracle_sql(q))
+        assert good, f"{msg}\n{q}"

@@ -80,6 +80,17 @@ def test_submit_error_surface(server):
     assert info["error"]["message"]
 
 
+def test_submit_reports_executed_sql(server):
+    """`sql` is the SQL the run executed: in_subquery's aggregate
+    subquery is a staged view there, not inline SQL."""
+    from wvlet_spark.suite import SUITE
+
+    code, info = _post(server, "/v1/query", {
+        "query": SUITE["in_subquery"][0], "querySelection": "all"})
+    assert code == 200, info
+    assert "__wv_insub_" in info["sql"]
+
+
 def test_submit_runs_embedded_tests(server):
     code, info = _post(server, "/v1/query", {
         "query": "from region count\ntest _.rows should be [[5]]"})

@@ -68,6 +68,21 @@ def transform(node, expr_fn=None, rel_fn=None, _depth=0):
     return node
 
 
+def walk(node):
+    """Every AST node under `node` (itself included), parents before
+    children: the read-only counterpart of transform."""
+    stack = [node]
+    while stack:
+        x = stack.pop()
+        if isinstance(x, (list, tuple)):
+            stack.extend(reversed(x))
+        elif _is_node(x):
+            yield x
+            if dataclasses.is_dataclass(x):
+                stack.extend(getattr(x, f.name)
+                             for f in reversed(dataclasses.fields(x)))
+
+
 class Analyzer:
     """Holds the session's definitions and rewrites query plans."""
 

@@ -22,7 +22,6 @@ Key semantic rules re-implemented from the reference language:
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass, field
 
@@ -1527,8 +1526,6 @@ class SqlGenerator:
 
         if self.dialect != SPARK:
             return None
-        if os.environ.get("WVLET_SPARK_FUSE_INTERSECT", "1") == "0":
-            return None  # A/B kill switch (measurement harnesses)
 
         branches: list[N.Relation] = []
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import dataclasses
 import datetime
-import os
 from dataclasses import dataclass
 
 from wvlet_spark import nodes as N
@@ -603,8 +602,6 @@ def reorder_joins(rel, schema_of, stats_of, broadcast_bytes=None):
     stats_of(name)->TableStats|None.  broadcast_bytes: the session's
     autoBroadcastJoinThreshold (None -> Spark's 10 MB default; <=0
     disables broadcast awareness, costing every step as a shuffle)."""
-    if os.environ.get("WVLET_SPARK_JOIN_REORDER", "1") == "0":
-        return rel
     bcast = float(DEFAULT_BROADCAST_BYTES if broadcast_bytes is None
                   else broadcast_bytes)
 

@@ -225,7 +225,13 @@ class Parser:
             return stmt
         # query forms: from / select / show / with
         rel, tests = self.parse_query()
-        # save/append/delete were folded into pipe parsing; unwrap them
+        # save/append/delete were folded into pipe parsing; unwrap them,
+        # first hoisting one that ends a `with` body above the WithQuery
+        markers = (_SaveMarker, _AppendMarker, _DeleteMarker)
+        if isinstance(rel, N.WithQuery) and isinstance(rel.body, markers):
+            marker = rel.body
+            marker.child = N.WithQuery(rel.defs, marker.child, rel.recursive)
+            rel = marker
         if isinstance(rel, _SaveMarker):
             return N.SaveTo(rel.child, rel.target, rel.is_file, rel.options, tests)
         if isinstance(rel, _AppendMarker):

@@ -183,10 +183,7 @@ class WvletServer:
                 info["columns"] = df.columns
                 info["rows"] = [list(r) for r in rows]
                 info["rowCount"] = len(rows)
-                try:
-                    info["sql"] = self.session.compile_to_sql(selected)
-                except Exception:
-                    pass
+                info["sql"] = self.session.last_sql
             info["status"] = "finished"
             info["testResults"] = [
                 [ok, msg] for ok, msg in self.session.last_test_results]

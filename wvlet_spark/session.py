@@ -1,23 +1,38 @@
 """WvletSession — compile and run wvlet queries on a SparkSession.
 
 Execution model (mirrors the reference's Compiler + QueryExecutor split,
-re-imagined for Spark):
+re-imagined for Spark).  Each statement is parsed, its definitions are
+registered, and a query is lowered to Spark SQL by ``_lower`` — the one
+path behind run, compile_to_sql, explain, ``show query``, describe and
+debug, so the SQL it returns is the SQL that runs:
 
-    parse -> register defs -> analyze (expand models/vals/defs)
-          -> stage special sources (files, show-commands) as temp views
-          -> generate Spark SQL -> spark.sql(...) -> DataFrame
+    1. describe / describe input|output  -> staged schema views
+    2. uncorrelated aggregate IN-subqueries  -> staged views
+    3. multiply-referenced aggregate CTEs  -> staged views
+    4. resolve (expand models/vals/defs) and bind prepared parameters
+    5. file scans, show-commands, subscribe, connectors  -> staged sources
+    6. greedy join reorder from parquet-footer stats
+    -> generate Spark SQL -> spark.sql(...) -> DataFrame
 
-The DuckDB dialect of the same generator produces oracle SQL used by the
-test-suite / driver to cross-check results.
+The bodies that steps 2-3 stage are lowered from step 4 on.  Every staged
+view is a ``__wv_<kind>_*`` temp view made by ``_stage_view``: file views
+are cached for the session; the others are dropped, with their schema
+cache entries, when the next statement starts.
+
+The DuckDB dialect of the same generator (step 4 and generation only)
+produces oracle SQL used by the tests and `__spark_entry__.py` to
+cross-check results.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
+import threading
 
 from wvlet_spark import nodes as N
-from wvlet_spark.analyzer import Analyzer, transform
+from wvlet_spark.analyzer import Analyzer, transform, walk
 from wvlet_spark.generator import DUCKDB, SPARK, CompileError, GenContext, SqlGenerator
 from wvlet_spark.parser import Parser, _SaveMarker
 
@@ -49,6 +64,10 @@ class WvletSession:
         self._tstats_cache: dict[str, object] = {}
         self._file_views: dict[str, str] = {}
         self._view_n = 0
+        # run-scoped staged views, released when the next statement starts
+        self._run_views: list[str] = []
+        self._in_flight = 0   # statements running on this session
+        self._lock = threading.Lock()
         self._watermarks: dict[str, object] = {}
         self._flows: dict[str, N.FlowDef] = {}
         self._flow_executor = None
@@ -58,6 +77,7 @@ class WvletSession:
         self._tools: dict[str, object] = {}
         self._register_builtin_tools()
         self.last_test_results: list[tuple[bool, str]] = []
+        self.last_sql: str | None = None   # the last SQL run() executed
         if spark is not None:
             try:
                 # Spark 4.1 TIME type (wvlet `time`, TIME 'hh:mm:ss'
@@ -197,34 +217,56 @@ class WvletSession:
 
     def compile_to_sql(self, text: str, dialect: str = SPARK,
                        params: list | tuple | dict | None = None) -> str:
-        """Compile the last query statement in `text` to SQL.  `params`
-        binds prepared-statement parameters (`?` / `$1` positionally from a
+        """Compile the last query statement in `text` to SQL: for the Spark
+        dialect, the SQL that `run(text)` executes.  The staged views it
+        names live until the next statement starts.  `params` binds
+        prepared-statement parameters (`?` / `$1` positionally from a
         list, `$name` from a dict)."""
         stmts = self.parse(text)
         sql = None
         for stmt in stmts:
             self.analyzer.register(stmt)
             if isinstance(stmt, N.QueryStatement):
-                body = _bind_prepared_params(stmt.body, params) \
-                    if params is not None else stmt.body
-                sql = self._gen_sql(body, dialect)
+                with self._statement():
+                    sql = self._lower(self._query_body(stmt, params),
+                                      dialect, params)
         if sql is None:
             raise CompileError("no query statement found")
         return sql
 
-    def _gen_sql(self, rel: N.Relation, dialect: str,
-                 params=None) -> str:
+    def _lower(self, rel: N.Relation, dialect: str = SPARK, params=None,
+               inner: bool = False) -> str:
+        """The one lowering path from a wvlet relation to SQL text; the
+        module docstring lists its steps.  `inner` lowers the body of a
+        view that steps 2-3 stage: the enclosing statement already ran
+        steps 1-3, so it starts at step 4.  The DuckDB dialect and a
+        session without Spark run step 4 only."""
+        staged = dialect == SPARK and self.spark is not None
+        if staged and not inner:
+            if _tree_contains(rel, (N.Describe, N.DescribePrepared)):
+                rel = transform(rel, rel_fn=self._stage_describe)
+            rel = self._stage_agg_in_subqueries(rel, params)
+            rel = self._stage_multi_ref_ctes(rel, params)
         plan = self.analyzer.resolve(rel)
         if params is not None:
             # second binding pass AFTER model expansion: parameters inside
             # an expanded model body (a converted PREPARE statement) only
             # exist post-resolve
             plan = _bind_prepared_params(plan, params)
-        if dialect == SPARK and self.spark is not None:
-            plan = self._stage_sources(plan)
-            plan = self._reorder_joins(plan)
-        gen = SqlGenerator(self._make_ctx(dialect))
-        return gen.generate(plan)
+        if staged:
+            plan = self._reorder_joins(self._stage_sources(plan))
+        return SqlGenerator(self._make_ctx(dialect)).generate(plan)
+
+    def _query_body(self, stmt: N.QueryStatement, params) -> N.Relation:
+        """A query statement's relation with parameters bound; `select as
+        name` registers the result as a model for later statements
+        (reference spec/basic/select-as.wv)."""
+        body = _bind_prepared_params(stmt.body, params) \
+            if params is not None else stmt.body
+        if isinstance(body, N.AliasedRelation) and body.from_select_as:
+            self.analyzer.register(N.ModelDef(body.alias, [], body.child))
+            body = body.child
+        return body
 
     def _reorder_joins(self, plan: N.Relation) -> N.Relation:
         """Greedy join reordering from parquet-footer stats (joinorder.py).
@@ -547,17 +589,61 @@ class WvletSession:
         run-scoped tables).  The ULID suffix also isolates concurrent
         WvletSessions sharing one SparkSession."""
         staged = self._conn_staged.get(name)
-        if staged is not None:
-            return staged
-        from wvlet_spark.analyzer import _ulid_string
+        if staged is None:
+            from wvlet_spark.analyzer import _ulid_string
 
-        df = self._connectors[name](self.spark)
-        view = ("__wv_conn_" + re.sub(r"[^A-Za-z0-9_]", "_", name)
-                + "_" + _ulid_string().lower())
+            suffix = (re.sub(r"[^A-Za-z0-9_]", "_", name) + "_"
+                      + _ulid_string().lower())
+            staged = self._conn_staged[name] = self._stage_view(
+                self._connectors[name](self.spark), "conn", suffix)
+        return staged
+
+    def _stage_view(self, df, kind: str, suffix: str | None = None) -> str:
+        """Register `df` as the temp view `__wv_<kind>_<suffix>` (suffix
+        defaults to the session's view counter) and record its schema.
+        File views are cached for the session (`_file_views`); every other
+        kind is run-scoped and released by `_release_views`."""
+        if suffix is None:
+            self._view_n += 1
+            suffix = str(self._view_n)
+        view = f"__wv_{kind}_{suffix}"
         df.createOrReplaceTempView(view)
         self._schema_cache[view] = df.columns
-        self._conn_staged[name] = view
+        if kind != "file":
+            self._run_views.append(view)
         return view
+
+    def _release_views(self) -> None:
+        """Drop the run-scoped views and their schema cache entries:
+        column_type() scans the whole cache, so dead names would slow
+        compiles down over a long session.  A new statement also sees
+        fresh connector data (one invocation per statement)."""
+        for view in self._run_views:
+            try:
+                self.spark.catalog.dropTempView(view)
+            except Exception:
+                pass
+            self._schema_cache.pop(view, None)
+        if self._run_views:
+            self._coltype_cache.clear()
+        self._run_views.clear()
+        self._conn_staged.clear()
+
+    @contextlib.contextmanager
+    def _statement(self):
+        """Scope of one statement.  The first statement in flight releases
+        the previous statement's views; a nested run (a tool reading a
+        model) or a concurrent server request leaves them to their
+        running owner."""
+        with self._lock:
+            self._in_flight += 1
+            if self._in_flight == 1:
+                self._release_views()
+        try:
+            yield
+        finally:
+            with self._lock:
+                self._in_flight -= 1
 
     def _resolve_path(self, path: str) -> str:
         if re.match(r"^[a-z0-9+.-]+://", path) or os.path.isabs(path):
@@ -626,12 +712,8 @@ class WvletSession:
             ])
         else:
             df = reader.parquet(path)
-        self._view_n += 1
-        view = f"__wv_file_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._file_views[key] = view
-        self._file_views[node.path] = view
-        self._schema_cache[view] = df.columns
+        view = self._stage_view(df, "file")
+        self._file_views[key] = self._file_views[node.path] = view
         return view
 
     def _stage_show(self, node: N.Show) -> str:
@@ -671,8 +753,7 @@ class WvletSession:
             mdl = self.analyzer.models.get(node.in_target)
             if mdl is None:
                 raise CompileError(f"unknown model: {node.in_target}")
-            sql = self._gen_sql(mdl.body, SPARK)
-            rows = [(node.in_target, sql)]
+            rows = [(node.in_target, self._lower(mdl.body))]
             schema = StructType(
                 [StructField("name", StringType()), StructField("query", StringType())])
         elif kind == "columns":
@@ -686,12 +767,7 @@ class WvletSession:
         if node.like:
             pat = re.compile("^" + node.like.replace("%", ".*").replace("_", ".") + "$", re.I)
             rows = [r for r in rows if pat.match(r[0])]
-        df = spark.createDataFrame(rows, schema)
-        self._view_n += 1
-        view = f"__wv_show_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        return df and view
+        return self._stage_view(spark.createDataFrame(rows, schema), "show")
 
     def _stage_subscribe(self, node: N.Subscribe) -> N.Relation:
         """Batch incremental read: rows with wm < ts <= wm + window.
@@ -709,28 +785,13 @@ class WvletSession:
         stmts = self.parse(text)
         result = None
         self.last_test_results = []
+        self.last_sql = None
         for stmt in stmts:
-            result = self._run_stmt(stmt, params=params) or result
+            with self._statement():
+                result = self._run_stmt(stmt, params=params) or result
         return result
 
     def _run_stmt(self, stmt: N.Statement, params=None):
-        # connector staging is statement-scoped: a new statement sees fresh
-        # connector data (one invocation), and the previous statement's
-        # run-scoped views are dropped
-        if self._conn_staged and self.spark is not None:
-            for view in self._conn_staged.values():
-                try:
-                    self.spark.catalog.dropTempView(view)
-                except Exception:
-                    pass
-                # keep the schema caches in lockstep with the catalog:
-                # dead staged-view names would otherwise accumulate across
-                # statements and degrade column_type() scans over a long
-                # session (each dead entry costs a caught spark.table()
-                # failure per lookup)
-                self._schema_cache.pop(view, None)
-            self._conn_staged.clear()
-            self._coltype_cache.clear()
         if isinstance(stmt, (N.SaveTo, N.AppendTo, N.DeleteStmt, N.InsertStmt,
                              N.TruncateStmt, N.ExecuteStmt)):
             # table contents are about to change — footer stats go stale
@@ -760,14 +821,7 @@ class WvletSession:
                 pass
             return None
         if isinstance(stmt, N.QueryStatement):
-            body = _bind_prepared_params(stmt.body, params) \
-                if params is not None else stmt.body
-            if isinstance(body, N.AliasedRelation) and body.from_select_as:
-                # `select as name` names the query result for later
-                # statements (reference spec/basic/select-as.wv)
-                self.analyzer.register(N.ModelDef(body.alias, [], body.child))
-                body = body.child
-            df = self.sql_df(body, params=params)
+            df = self.sql_df(self._query_body(stmt, params), params=params)
             if self.test_mode and stmt.tests:
                 from wvlet_spark.testing import evaluate_tests
 
@@ -806,8 +860,8 @@ class WvletSession:
         if isinstance(stmt, N.ExplainStmt):
             if stmt.sql is not None:
                 return self.spark.sql(f"EXPLAIN {stmt.sql}")
-            sql = self._gen_sql(stmt.body, SPARK)
-            return self.spark.sql(f"EXPLAIN FORMATTED {sql}")
+            return self.spark.sql(
+                f"EXPLAIN FORMATTED {self._lower(stmt.body)}")
         if isinstance(stmt, N.FlowDef):
             # wiring errors surface at declaration, not first run
             self.flow_executor.validate(stmt)
@@ -864,10 +918,7 @@ class WvletSession:
         if stmt.pipe is not None or stmt.tests:
             from wvlet_spark.parser import _HoleRelation
 
-            self._view_n += 1
-            view = f"__wv_flowrun_{self._view_n}"
-            df.createOrReplaceTempView(view)
-            self._schema_cache[view] = df.columns
+            view = self._stage_view(df, "flowrun")
             if stmt.pipe is not None:
                 def fill(n):
                     return N.TableRef(view) if isinstance(n, _HoleRelation) else n
@@ -893,15 +944,7 @@ class WvletSession:
     def sql_df(self, rel: N.Relation, params=None):
         # run debug side-channels eagerly (they print, input passes through)
         self._run_debugs(rel)
-        # describe nodes (top-level or mid-pipe) materialize the child's
-        # schema driver-side: (column_name, column_type) with wvlet type
-        # names — reference: spec/basic/describe.wv. Schema comes from
-        # Spark's analyzer only (no job runs).
-        if _contains_describe(rel):
-            rel = transform(rel, rel_fn=self._stage_describe)
-        rel = self._stage_agg_in_subqueries(rel, params)
-        rel = self._stage_multi_ref_ctes(rel, params)
-        sql = self._gen_sql(rel, SPARK, params=params)
+        sql = self.last_sql = self._lower(rel, params=params)
         try:
             return self.spark.sql(sql)
         except Exception as ex:
@@ -934,71 +977,40 @@ class WvletSession:
         list and the aggregation runs exactly once.
 
         Correlated subqueries reference outer columns and fail analysis
-        when compiled standalone — the except leaves them inline, where
+        when compiled standalone — `_stage_query` leaves them inline, where
         Catalyst's decorrelation handles them.  Subqueries that reference
         a CTE declared by the statement are also left inline: compiled
         standalone, a CTE name that shadows a real table would silently
         resolve to the TABLE (wrong relation), so any name collision
         disqualifies staging."""
-        import dataclasses
-
-        from wvlet_spark.analyzer import transform as ast_transform
-
-        cte_names: set[str] = set()
-
-        def collect_ctes(x):
-            if isinstance(x, N.WithQuery):
-                for name, _q in x.defs:
-                    cte_names.add(name.lower())
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                for f in dataclasses.fields(x):
-                    collect_ctes(getattr(x, f.name))
-            elif isinstance(x, (list, tuple)):
-                for i in x:
-                    collect_ctes(i)
-
-        collect_ctes(rel)
-
-        def refs_cte(sub: N.Relation) -> bool:
-            hit = False
-
-            def walk(x):
-                nonlocal hit
-                if hit:
-                    return
-                if isinstance(x, N.TableRef) and x.name.lower() in cte_names:
-                    hit = True
-                    return
-                if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                    for f in dataclasses.fields(x):
-                        walk(getattr(x, f.name))
-                elif isinstance(x, (list, tuple)):
-                    for i in x:
-                        walk(i)
-
-            walk(sub)
-            return hit
+        cte_names = {name.lower() for w in walk(rel)
+                     if isinstance(w, N.WithQuery) for name, _q in w.defs}
 
         def expr_fn(e: N.Expr) -> N.Expr:
-            if not isinstance(e, N.InSubquery):
+            if not isinstance(e, N.InSubquery) \
+                    or not _tree_contains(e.query, _AGG_NODES):
                 return e
-            if not _tree_contains(e.query, (N.GroupBy, N.Agg, N.Dedup,
-                                            N.CountRel)):
+            if cte_names and any(
+                    isinstance(x, N.TableRef) and x.name.lower() in cte_names
+                    for x in walk(e.query)):
                 return e
-            if cte_names and refs_cte(e.query):
+            view = self._stage_query(e.query, params, "insub")
+            if view is None:
                 return e
-            try:
-                sub_sql = self._gen_sql(e.query, SPARK, params=params)
-                df = self.spark.sql(sub_sql).localCheckpoint(eager=False)
-            except Exception:
-                return e
-            self._view_n += 1
-            view = f"__wv_insub_{self._view_n}"
-            df.createOrReplaceTempView(view)
-            self._schema_cache[view] = df.columns
             return N.InSubquery(e.expr, N.TableRef(view), e.negated)
 
-        return ast_transform(rel, expr_fn=expr_fn)
+        return transform(rel, expr_fn=expr_fn)
+
+    def _stage_query(self, rel: N.Relation, params, kind: str) -> str | None:
+        """Stage `rel` as a lazily localCheckpoint-ed view; None when it
+        does not compile standalone (a correlated subquery fails Spark's
+        analysis and stays inline)."""
+        try:
+            df = self.spark.sql(self._lower(rel, params=params, inner=True)
+                                ).localCheckpoint(eager=False)
+        except Exception:
+            return None
+        return self._stage_view(df, kind)
 
     def _stage_multi_ref_ctes(self, rel: N.Relation,
                               params=None) -> N.Relation:
@@ -1022,37 +1034,20 @@ class WvletSession:
         (any CTE name defined twice in the statement) disqualify staging
         for that name — a standalone compile could bind the wrong
         relation.  Recursive WITH blocks are left untouched."""
+        import collections
         import dataclasses
 
+        if not isinstance(rel, N.WithQuery) or rel.recursive:
+            return rel
         # count every CTE definition by name across the whole tree (a
         # nested WITH could shadow an outer name)
-        def_counts: dict[str, int] = {}
-
-        def count_defs(x):
-            if isinstance(x, N.WithQuery):
-                for name, _q in x.defs:
-                    def_counts[name.lower()] = \
-                        def_counts.get(name.lower(), 0) + 1
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                for f in dataclasses.fields(x):
-                    count_defs(getattr(x, f.name))
-            elif isinstance(x, (list, tuple)):
-                for i in x:
-                    count_defs(i)
-
-        count_defs(rel)
+        def_counts = collections.Counter(
+            name.lower() for w in walk(rel) if isinstance(w, N.WithQuery)
+            for name, _q in w.defs)
 
         def count_refs(x, name: str) -> int:
-            n = 0
-            if isinstance(x, N.TableRef) and x.name.lower() == name:
-                n += 1
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                for f in dataclasses.fields(x):
-                    n += count_refs(getattr(x, f.name), name)
-            elif isinstance(x, (list, tuple)):
-                for i in x:
-                    n += count_refs(i, name)
-            return n
+            return sum(isinstance(n, N.TableRef) and n.name.lower() == name
+                       for n in walk(x))
 
         def rename_refs(x, name: str, view: str, orig: str):
             """TableRef(name) -> AliasedRelation(TableRef(view), orig):
@@ -1062,8 +1057,6 @@ class WvletSession:
             the first version renamed in place).  An explicitly aliased
             reference (`cte AS x`) keeps its own alias: the bottom-up
             rewrite collapses the doubled alias node."""
-            from wvlet_spark.analyzer import transform as ast_transform
-
             def rel_fn(n):
                 if isinstance(n, N.TableRef) and n.name.lower() == name:
                     return N.AliasedRelation(N.TableRef(view), orig)
@@ -1075,10 +1068,8 @@ class WvletSession:
                     return dataclasses.replace(n, child=n.child.child)
                 return n
 
-            return ast_transform(x, rel_fn=rel_fn)
+            return transform(x, rel_fn=rel_fn)
 
-        if not isinstance(rel, N.WithQuery) or rel.recursive:
-            return rel
         kept_defs: list[tuple[str, N.Relation]] = []
         defs = list(rel.defs)
         body = rel.body
@@ -1092,21 +1083,14 @@ class WvletSession:
             refs_kept = any(count_refs(q, kn.lower()) for kn, _ in kept_defs)
             if (nrefs < 2
                     or refs_kept
-                    or def_counts.get(name.lower(), 0) > 1
-                    or not _tree_contains(q, (N.GroupBy, N.Agg, N.Dedup,
-                                              N.CountRel))):
+                    or def_counts[name.lower()] > 1
+                    or not _tree_contains(q, _AGG_NODES)):
                 kept_defs.append((name, q))
                 continue
-            try:
-                sub_sql = self._gen_sql(q, SPARK, params=params)
-                df = self.spark.sql(sub_sql).localCheckpoint(eager=False)
-            except Exception:
+            view = self._stage_query(q, params, "cte")
+            if view is None:
                 kept_defs.append((name, q))
                 continue
-            self._view_n += 1
-            view = f"__wv_cte_{self._view_n}"
-            df.createOrReplaceTempView(view)
-            self._schema_cache[view] = df.columns
             for j, (dn, dq) in enumerate(later_defs):
                 defs[i + 1 + j] = (dn, rename_refs(dq, name.lower(),
                                                    view, name))
@@ -1116,22 +1100,21 @@ class WvletSession:
         return N.WithQuery(kept_defs, body, rel.recursive)
 
     def _stage_describe(self, node: N.Relation) -> N.Relation:
+        """A describe node (top-level or mid-pipe) materializes its child's
+        schema as a small local table: (column_name, column_type) with wvlet
+        type names — reference: spec/basic/describe.wv.  The schema comes from
+        Spark's analyzer only (no job runs)."""
         if isinstance(node, N.DescribePrepared):
             return self._stage_describe_prepared(node)
         if not isinstance(node, N.Describe):
             return node
         from wvlet_spark.printer import _type_name
 
-        inner_sql = self._gen_sql(node.child, SPARK)
-        schema = self.spark.sql(inner_sql).schema
+        schema = self.spark.sql(self._lower(node.child)).schema
         rows = [(f.name, _type_name(f.dataType)) for f in schema.fields]
         df = self.spark.createDataFrame(
             rows, "column_name string, column_type string")
-        self._view_n += 1
-        view = f"__wv_desc_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        return N.TableRef(view)
+        return N.TableRef(self._stage_view(df, "desc"))
 
     def _stage_describe_prepared(self, node: N.DescribePrepared
                                  ) -> N.Relation:
@@ -1141,8 +1124,6 @@ class WvletSession:
         bound, as in Trino); OUTPUT resolves the body's schema through
         Spark's analyzer with parameters null-bound (no job runs)."""
         from copy import deepcopy
-
-        from wvlet_spark.analyzer import transform as ast_transform
 
         mdl = self.analyzer.models.get(node.name)
         if mdl is None:
@@ -1162,13 +1143,11 @@ class WvletSession:
                         seen.append((pos, "unknown"))
                 return n
 
-            ast_transform(mdl.body, expr_fn=collect)
+            transform(mdl.body, expr_fn=collect)
             for i, (pname, ptype, _d) in enumerate(mdl.params or []):
                 seen.append((i + 1, ptype or "unknown"))
-            rows = sorted(set(seen)) or []
-            df = self.spark.createDataFrame(
-                rows, "position int, type string") if rows else \
-                self.spark.createDataFrame([], "position int, type string")
+            df = self.spark.createDataFrame(sorted(set(seen)),
+                                            "position int, type string")
         else:
             from wvlet_spark.printer import _type_name
 
@@ -1177,17 +1156,13 @@ class WvletSession:
                     return N.Literal(None, "null")
                 return n
 
-            body = ast_transform(deepcopy(mdl.body), expr_fn=null_bind)
+            body = transform(deepcopy(mdl.body), expr_fn=null_bind)
             body = self.analyzer.resolve(body, (node.name,))
-            schema = self.spark.sql(self._gen_sql(body, SPARK)).schema
+            schema = self.spark.sql(self._lower(body)).schema
             rows = [(f.name, _type_name(f.dataType)) for f in schema.fields]
             df = self.spark.createDataFrame(
                 rows, "column_name string, column_type string")
-        self._view_n += 1
-        view = f"__wv_desc_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        return N.TableRef(view)
+        return N.TableRef(self._stage_view(df, "desc"))
 
     def _run_debugs(self, rel: N.Relation) -> None:
         debugs: list[N.Debug] = []
@@ -1206,8 +1181,6 @@ class WvletSession:
                 def fill(n):
                     return d.child if isinstance(n, _HoleRelation) else n
 
-                from wvlet_spark.parser import _SaveMarker
-
                 if isinstance(body, _SaveMarker):
                     # a save inside debug executes for real — the main pipe
                     # continues unaffected (spec/basic/debug-save.wv).
@@ -1218,7 +1191,7 @@ class WvletSession:
                         child, body.target, body.is_file, body.options, []))
                     continue
                 body = transform(body, rel_fn=fill)
-                df = self.spark.sql(self._gen_sql(body, SPARK))
+                df = self.spark.sql(self._lower(body))
                 df.show(20, truncate=False)
             except Exception as ex:  # debug must never fail the main query
                 print(f"[debug] failed: {ex}")
@@ -1399,31 +1372,12 @@ def _parse_byte_conf(v) -> int | None:
     return n << shift if n >= 0 else n
 
 
+# relations whose presence makes a subquery or CTE worth staging
+_AGG_NODES = (N.GroupBy, N.Agg, N.Dedup, N.CountRel)
+
+
 def _tree_contains(rel, types: tuple) -> bool:
-    import dataclasses
-
-    found = False
-
-    def walk(x):
-        nonlocal found
-        if found:
-            return
-        if isinstance(x, types):
-            found = True
-            return
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for f in dataclasses.fields(x):
-                walk(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            for i in x:
-                walk(i)
-
-    walk(rel)
-    return found
-
-
-def _contains_describe(rel) -> bool:
-    return _tree_contains(rel, (N.Describe, N.DescribePrepared))
+    return any(isinstance(n, types) for n in walk(rel))
 
 
 def _json_key_order(path: str) -> list[str] | None:
