@@ -362,3 +362,70 @@ run flow lonely
     st = {r["stage"]: (r["state"], r["error"]) for r in df.collect()}
     assert st["b"][0] == "failed"
     assert "missing_flow_zzz" in (st["b"][1] or "")
+
+
+def _stage_rows(spark, df, stage):
+    run_id = df.collect()[0]["run_id"]
+    return spark.table(f"__wv_flow_{run_id}_{stage}").collect()
+
+
+def _errors(df):
+    return {r["stage"]: (r["state"], r["error"]) for r in df.collect()}
+
+
+def test_flow_stage_reads_upstream_inside_with(ws, spark):
+    """A read of an earlier stage inside a `with` definition goes to the
+    run's scoped view of that stage."""
+    df = ws.run("""
+flow withdef = {
+  stage a = { from nation where n_regionkey = 1 }
+  stage b from a = { with t as { from a } from t select n_name }
+}
+run flow withdef
+""")
+    assert set(states(df).values()) == {"success"}, _errors(df)
+    want = ws.run("from nation where n_regionkey = 1 select n_name").collect()
+    assert sorted(_stage_rows(spark, df, "b")) == sorted(want)
+
+
+def test_flow_param_inside_with(ws, spark):
+    df = ws.run("""
+flow f2(rk: int = 0) = {
+  stage a = { with t as { from nation where n_regionkey = rk } from t }
+}
+run flow f2(rk=2)
+""")
+    assert states(df) == {"a": "success"}, _errors(df)
+    rows = _stage_rows(spark, df, "a")
+    assert len(rows) == 5 and {r["n_regionkey"] for r in rows} == {2}
+
+
+def test_flow_boolean_param(ws, spark):
+    """A boolean flow argument binds as a boolean literal, not a string."""
+    df = ws.run("""
+flow f3(on: boolean = true) = {
+  stage a = { from nation where on }
+}
+run flow f3
+""")
+    assert states(df) == {"a": "success"}, _errors(df)
+    assert len(_stage_rows(spark, df, "a")) == 25
+    df = ws.run("run flow f3(on=false)")
+    assert states(df) == {"a": "success"}, _errors(df)
+    assert _stage_rows(spark, df, "a") == []
+
+
+def test_flow_dependency_inside_with(ws, spark):
+    """A stage whose only read of an upstream stage sits in a `with`
+    definition depends on that stage, so it runs after it."""
+    df = ws.run("""
+flow implicit = {
+  stage a = { from nation where n_regionkey = 3 }
+  stage b = { with t as { from a } from t select n_name }
+}
+run flow implicit
+""")
+    fd = ws._flows["implicit"]
+    assert ws.flow_executor._stage_deps(fd.stages[1], {"a", "b"}, {}) == {"a"}
+    assert states(df) == {"a": "success", "b": "success"}, _errors(df)
+    assert len(_stage_rows(spark, df, "b")) == 5

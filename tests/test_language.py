@@ -30,6 +30,15 @@ test _.rows = [[1, "alice", 10]]
     assert rows(df) == [[1, "alice", 10]]
 
 
+def test_filter_on_bare_identifier_or_literal(ws):
+    """`FROM t WHERE (x)` parses on Spark as a table alias with a column
+    list, so a one-token condition straight after a table must still
+    filter."""
+    assert rows(run(ws, "from region where true count")) == [[5]]
+    assert rows(run(ws, "from region where false count")) == [[0]]
+    assert "WHERE ((TRUE))" in compile_to_sql("from region where true")
+
+
 def test_left_join_using(ws):
     df = run(ws, """
 from [[1, "alice", 10], [2, "bob", 20], [3, "clark", 30]] as p(id, name, age)

@@ -215,6 +215,14 @@ def test_minhash_hot_bucket_cap_on_by_default():
     assert default is not None and 0 < default <= 100_000
 
 
+def test_minhash_signatures_rejects_unknown_impl():
+    """A misspelled impl is an error, not a silent fallback."""
+    from wvlet_spark.ops.dedup import minhash_signatures
+
+    with pytest.raises(ValueError, match="unknown impl 'pandas'"):
+        minhash_signatures(None, impl="pandas")
+
+
 def test_video_frame_sampling_plumbing(spark):
     from tests.conftest import SF_DIR
     from wvlet_spark.ops.multimodal import sample_video_frames, with_binary_payload

@@ -91,6 +91,35 @@ def test_submit_reports_executed_sql(server):
     assert "__wv_insub_" in info["sql"]
 
 
+def test_concurrent_requests_get_distinct_ids(server):
+    """Concurrent requests each take their own queryId and history entry."""
+    import sys
+    import threading
+
+    results = []
+
+    def client():
+        for _ in range(5):
+            results.append(server.execute_request(
+                {"query": "from region count"}))
+
+    threads = [threading.Thread(target=client) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    ids = [info["queryId"] for info in results]
+    assert len(ids) == 40 and len(set(ids)) == 40
+    assert all(info["error"] is None for info in results)
+    assert all(server._history[info["queryId"]] is info for info in results)
+
+
 def test_submit_runs_embedded_tests(server):
     code, info = _post(server, "/v1/query", {
         "query": "from region count\ntest _.rows should be [[5]]"})

@@ -18,7 +18,7 @@ import pytest
 
 SQL_DIR = "/root/reference/spec/sql"
 
-pytestmark = pytest.mark.skipif(
+needs_corpus = pytest.mark.skipif(
     not os.path.isdir(SQL_DIR), reason="reference sql corpus not available")
 
 # file -> (min converted statements, max rejected statements).
@@ -69,6 +69,7 @@ def _corpus_files():
     return sorted(EXPECTED)
 
 
+@needs_corpus
 @pytest.mark.parametrize("relpath", _corpus_files())
 def test_dialect_corpus_converts_or_documents(relpath):
     from wvlet_spark.parser import Parser
@@ -103,6 +104,7 @@ def _norm(rows):
     return sorted(out)
 
 
+@needs_corpus
 def test_trino_union_in_parentheses_executes(spark):
     """Self-contained VALUES/UNION statements run on Spark and match
     DuckDB running the ORIGINAL SQL."""

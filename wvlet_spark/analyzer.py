@@ -68,9 +68,16 @@ def transform(node, expr_fn=None, rel_fn=None, _depth=0):
     return node
 
 
-def walk(node):
+def walk(node, descend=None):
     """Every AST node under `node` (itself included), parents before
-    children: the read-only counterpart of transform."""
+    children, children in field order: the read-only counterpart of
+    transform.  Lists and tuples (`WithQuery.defs` pairs, `CaseExpr`
+    whens) are searched too.
+
+    `descend(n)` -> False yields `n` but not the nodes below it: a query
+    that must stop at a subquery boundary passes
+    `lambda n: not isinstance(n, N.Relation)`, one that reads `alias.col`
+    as one column passes `not_alias_ref`."""
     stack = [node]
     while stack:
         x = stack.pop()
@@ -78,9 +85,17 @@ def walk(node):
             stack.extend(reversed(x))
         elif _is_node(x):
             yield x
-            if dataclasses.is_dataclass(x):
+            if dataclasses.is_dataclass(x) \
+                    and (descend is None or descend(x)):
                 stack.extend(getattr(x, f.name)
                              for f in reversed(dataclasses.fields(x)))
+
+
+def not_alias_ref(n) -> bool:
+    """walk() predicate that stops at `alias.col`: a Ref whose qualifier is
+    a bare Ident names a relation, not a column.  A struct-access
+    qualifier (`a.b.c`) is still entered."""
+    return not (isinstance(n, N.Ref) and isinstance(n.qualifier, N.Ident))
 
 
 class Analyzer:

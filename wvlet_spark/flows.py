@@ -38,6 +38,7 @@ from concurrent.futures import ThreadPoolExecutor, Future
 from dataclasses import dataclass, field
 
 from wvlet_spark import nodes as N
+from wvlet_spark.analyzer import transform, walk
 
 # terminal stage states — lowercase vocabulary matches the reference's
 # run-summary output (spec/basic/flow-run.wv: success/failed/skipped;
@@ -398,31 +399,13 @@ class FlowExecutor:
         if st.name in route_by_target:
             ds.add(route_by_target[st.name][0].source)
         if st.body is not None:
-            ds |= self._body_table_refs(st.body, stage_names)
+            ds |= {n.name for n in walk(st.body)
+                   if isinstance(n, N.TableRef) and n.name in stage_names}
         if st.condition is not None:
             ds |= {n for n in self._cond_stage_refs(st.condition) if n in stage_names}
         if st.kind in ("activate", "end") and not ds and st.sources:
             ds = set(st.sources)
         return ds
-
-    def _body_table_refs(self, rel, stage_names: set) -> set[str]:
-        found: set[str] = set()
-
-        def walk(node):
-            if node is None or not hasattr(node, "__dataclass_fields__"):
-                return
-            if isinstance(node, N.TableRef) and node.name in stage_names:
-                found.add(node.name)
-            for f in node.__dataclass_fields__:
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    for item in v:
-                        walk(item) if hasattr(item, "__dataclass_fields__") else None
-                elif hasattr(v, "__dataclass_fields__"):
-                    walk(v)
-
-        walk(rel)
-        return found
 
     def _cond_stage_refs(self, cond) -> set[str]:
         """Names referenced as x.failed / x.done / x.succeeded in a trigger."""
@@ -614,43 +597,28 @@ class FlowExecutor:
         self._materialize(run_id, st.name, df)
 
     def _lower_body(self, body, run_id, bound_args, st, route_by_target):
-        """Lower a stage body Relation to a DataFrame, with flow args bound
-        and route-source reads redirected to this stage's routed slice."""
-        rel = body
+        """Lower a stage body Relation to a DataFrame, with flow args bound,
+        stage reads redirected to this run's scoped views and route-source
+        reads to this stage's routed slice."""
+        views = dict(self._scopes.get(run_id) or {})
         if st.name in route_by_target:
             route, case_idx = route_by_target[st.name]
-            routed_view = self._ensure_route_views(run_id, route)
-            rel = self._rewrite_table_refs(rel, {route.source: routed_view[case_idx]})
-        scope = self._scopes.get(run_id)
-        if scope:
-            rel = self._rewrite_table_refs(rel, scope)
-        return self.session.df_for_relation(rel, params=bound_args)
+            views[route.source] = \
+                self._ensure_route_views(run_id, route)[case_idx]
 
-    def _rewrite_table_refs(self, rel, mapping: dict[str, str]):
-        import copy
-
-        def walk(node):
-            if node is None or not hasattr(node, "__dataclass_fields__"):
-                return node
-            node = copy.copy(node)
-            if isinstance(node, N.TableRef) and node.name in mapping:
+        def rel_fn(node):
+            if isinstance(node, N.TableRef) and node.name in views:
                 # alias the scoped view back to the stage name so qualified
                 # refs (`clean.customer_id` in a join ON) still resolve
                 # (spec/basic/flow-run.wv JoinPipeline)
-                orig = node.name
-                node.name = mapping[orig]
-                if "." not in orig:
-                    return N.AliasedRelation(node, orig)
-                return node
-            for f in node.__dataclass_fields__:
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    setattr(node, f, [walk(i) if hasattr(i, "__dataclass_fields__") else i for i in v])
-                elif hasattr(v, "__dataclass_fields__"):
-                    setattr(node, f, walk(v))
+                view = N.TableRef(views[node.name])
+                if "." not in node.name:
+                    return N.AliasedRelation(view, node.name)
+                return view
             return node
 
-        return walk(rel)
+        return self.session.df_for_relation(transform(body, rel_fn=rel_fn),
+                                            params=bound_args)
 
     def _ensure_route_views(self, run_id: str, route: N.FlowRoute) -> dict[int, str]:
         """Create one temp view per route case over the source stage's
@@ -688,8 +656,6 @@ class FlowExecutor:
             elif case.cond is not None:
                 # `case _.age >= 18` — `_` refers to the routed relation's
                 # current row (reference: spec/basic/flow-run.wv)
-                from wvlet_spark.analyzer import transform as _tf
-
                 def _drop_underscore(n):
                     if isinstance(n, (N.Ref, N.MethodCall)) and isinstance(
                             getattr(n, "qualifier", getattr(n, "target", None)),
@@ -697,7 +663,7 @@ class FlowExecutor:
                         return N.Ident(getattr(n, "name", getattr(n, "method", "")))
                     return n
 
-                pred = F.expr(self.session.expr_sql(_tf(case.cond, expr_fn=_drop_underscore)))
+                pred = F.expr(self.session.expr_sql(transform(case.cond, expr_fn=_drop_underscore)))
             else:  # else-case: remainder
                 pred = ~self._any_pred(taken_preds) if taken_preds else F.lit(True)
             view = f"__wv_route_{run_id}_{route.source}_{i}"

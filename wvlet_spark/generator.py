@@ -132,6 +132,37 @@ AGG_FUNCS = {
     "arg_max", "arg_min", "entropy",
 }
 
+# functions whose value differs per evaluation (_varies_per_evaluation)
+_NONDET_FNS = {"rand", "random", "randn", "uuid", "shuffle",
+               "monotonically_increasing_id", "ulid", "ulid_string",
+               "scan_position", "current_timestamp", "now"}
+
+
+def _is_agg_call(x) -> bool:
+    """An aggregate function or method call that is not windowed."""
+    name = x.name if isinstance(x, N.FunctionApply) \
+        else x.method if isinstance(x, N.MethodCall) else None
+    return name is not None and name.lower() in AGG_FUNCS and x.window is None
+
+
+def _contains_agg(e) -> bool:
+    """An aggregate call in `e` outside any subquery (a subquery's
+    aggregates belong to its own SELECT)."""
+    from wvlet_spark.analyzer import walk
+
+    return any(map(_is_agg_call,
+                   walk(e, lambda n: not isinstance(n, N.Relation))))
+
+
+def _varies_per_evaluation(x) -> bool:
+    """A non-deterministic call or a window: its value changes when an
+    expression is computed once and shared (staged below a grouping-sets
+    Expand, fused across INTERSECT branches) instead of per row."""
+    if isinstance(x, N.FunctionApply):
+        return x.name.lower() in _NONDET_FNS or x.window is not None
+    return isinstance(x, N.MethodCall) and x.window is not None
+
+
 SCALAR_METHOD_CASTS = {
     "to_int": "int",
     "to_long": "long",
@@ -144,6 +175,7 @@ SCALAR_METHOD_CASTS = {
 }
 
 _SAFE_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_ONE_IDENT = re.compile(r"^(?:[A-Za-z_][A-Za-z0-9_]*|`[^`]*`)$")
 
 
 def _re2_repl_tokens(rep: str):
@@ -643,7 +675,12 @@ class SqlGenerator:
         if b.source:
             parts.append("FROM " + b.source)
         if b.where:
-            parts.append("WHERE " + " AND ".join(f"({w})" for w in b.where))
+            # `FROM t WHERE (flag)` parses on Spark as the table alias
+            # `WHERE` with column list (flag): a condition that is one
+            # identifier or keyword (TRUE) takes a second pair of parens
+            parts.append("WHERE " + " AND ".join(
+                f"(({w}))" if _ONE_IDENT.match(w) else f"({w})"
+                for w in b.where))
         if b.group_keys is not None and b.group_keys != []:
             keys = [self._group_key_sql(k.expr) for k in b.group_keys]
             parts.append("GROUP BY " + ", ".join(keys))
@@ -1035,7 +1072,7 @@ class SqlGenerator:
             sel.append(self._select_item(it))
             names.append(self._item_name(it))
         # a plain select containing aggregate functions = implicit global agg
-        if any(self._contains_agg(it.expr) for it in items if isinstance(it, N.NamedExpr)):
+        if any(_contains_agg(it.expr) for it in items if isinstance(it, N.NamedExpr)):
             b.group_keys = []
         b.select = sel
         b.distinct = getattr(rel, "distinct", False)
@@ -1084,13 +1121,6 @@ class SqlGenerator:
         sql = self.expr(e)
         return [(f"{sql} AS {self.q(name)}" if k.alias else sql, name)]
 
-    # functions whose value differs per evaluation: staging one below the
-    # Expand would freeze a single draw across grouping sets, changing
-    # results — leave them in place
-    _NONDET_FNS = {"rand", "random", "randn", "uuid", "shuffle",
-                   "monotonically_increasing_id", "ulid", "ulid_string",
-                   "scan_position", "current_timestamp", "now"}
-
     def _stage_expand_agg_inputs(self, b, items):
         """Under cube/rollup/grouping-sets, Spark's Expand duplicates every
         input row once per grouping set BEFORE the partial aggregate, so a
@@ -1106,26 +1136,10 @@ class SqlGenerator:
         (DuckDB computes grouping sets without an expand)."""
         import dataclasses as _dc
 
-        from wvlet_spark.analyzer import transform as ast_transform
+        from wvlet_spark.analyzer import transform as ast_transform, walk
 
         staged: dict[str, str] = {}
         staged_order: list[tuple[str, str]] = []
-
-        def contains_blocked(e) -> bool:
-            found = [False]
-
-            def f(x):
-                if isinstance(x, N.FunctionApply) \
-                        and (x.name.lower() in self._NONDET_FNS
-                             or getattr(x, "window", None) is not None):
-                    found[0] = True
-                if isinstance(x, N.MethodCall) \
-                        and getattr(x, "window", None) is not None:
-                    found[0] = True
-                return x
-
-            ast_transform(e, expr_fn=f)
-            return found[0]
 
         def try_stage(e):
             """Staged replacement Ident for e, or None when e must stay
@@ -1134,7 +1148,8 @@ class SqlGenerator:
             unsafe: contains an aggregate, window, or non-deterministic
             call)."""
             if isinstance(e, (N.Ident, N.Literal, N.Star)) \
-                    or self._contains_agg(e) or contains_blocked(e):
+                    or _contains_agg(e) \
+                    or any(map(_varies_per_evaluation, walk(e))):
                 return None
             sql = self.expr(e)
             if sql == "*" or sql.endswith(".*") or re.fullmatch(
@@ -1149,15 +1164,11 @@ class SqlGenerator:
             return N.Ident(name)
 
         def fix(x):
-            if isinstance(x, N.FunctionApply) \
-                    and x.name.lower() in AGG_FUNCS \
-                    and getattr(x, "window", None) is None:
+            if isinstance(x, N.FunctionApply) and _is_agg_call(x):
                 new_args = [try_stage(a) or a for a in x.args]
                 if any(n is not o for n, o in zip(new_args, x.args)):
                     return _dc.replace(x, args=new_args)
-            if isinstance(x, N.MethodCall) \
-                    and x.method.lower() in AGG_FUNCS \
-                    and getattr(x, "window", None) is None:
+            if isinstance(x, N.MethodCall) and _is_agg_call(x):
                 t = try_stage(x.target)
                 if t is not None:
                     return _dc.replace(x, target=t)
@@ -1471,20 +1482,18 @@ class SqlGenerator:
     def _asof_order(self, cond: N.Expr, right_alias: str) -> tuple[str, bool]:
         """Find the inequality conjunct; return (right-side order expr SQL,
         descending?)."""
-        conjuncts: list[N.Expr] = []
+        from wvlet_spark.analyzer import walk
+        from wvlet_spark.joinorder import split_and
 
-        def collect(e):
-            if isinstance(e, N.And):
-                collect(e.left)
-                collect(e.right)
-            else:
-                conjuncts.append(e)
+        def on_right(e) -> bool:
+            return any(isinstance(x, N.Ref) and isinstance(x.qualifier, N.Ident)
+                       and x.qualifier.name == right_alias for x in walk(e))
 
-        collect(cond)
+        conjuncts = split_and(cond)
         for c in conjuncts:
             if isinstance(c, N.Comparison) and c.op in ("<", "<=", ">", ">="):
-                left_is_right = _references_alias(c.left, right_alias)
-                right_is_right = _references_alias(c.right, right_alias)
+                left_is_right = on_right(c.left)
+                right_is_right = on_right(c.right)
                 if left_is_right and not right_is_right:
                     # right_expr OP left_expr : e.g. stock.date <= holding.date
                     return self.expr(c.left), c.op in ("<", "<=")
@@ -1522,7 +1531,7 @@ class SqlGenerator:
         aggregate-free, window-free items and predicates, and a
         deterministic common source (Spark dialect only — DuckDB is the
         oracle side and stays the literal set op)."""
-        from wvlet_spark.analyzer import transform as ast_transform
+        from wvlet_spark.analyzer import walk
 
         if self.dialect != SPARK:
             return None
@@ -1552,36 +1561,12 @@ class SqlGenerator:
         if any(its != items0 or c != common0 for its, _, c in parsed[1:]):
             return None
 
-        bad = [False]
-
-        def expr_guard(x):
-            if isinstance(x, (N.InSubquery, N.Exists, N.ScalarSubquery)):
-                bad[0] = True
-            if isinstance(x, N.FunctionApply) \
-                    and (x.name.lower() in self._NONDET_FNS
-                         or getattr(x, "window", None) is not None):
-                bad[0] = True
-            if isinstance(x, N.MethodCall) \
-                    and getattr(x, "window", None) is not None:
-                bad[0] = True
-            return x
-
-        def rel_guard(r):
-            if isinstance(r, N.Sample):
-                bad[0] = True
-            return r
-
-        ast_transform(common0, expr_fn=expr_guard, rel_fn=rel_guard)
-        for it in items0:
-            ast_transform(it.expr, expr_fn=expr_guard)
-            if self._contains_agg(it.expr):
-                return None
         preds = [p for _, p, _ in parsed]
-        for p in preds:
-            ast_transform(p, expr_fn=expr_guard)
-            if self._contains_agg(p):
-                return None
-        if bad[0]:
+        exprs = [it.expr for it in items0] + preds
+        if any(_contains_agg(e) for e in exprs) or any(
+                _varies_per_evaluation(x) or isinstance(x, (
+                    N.InSubquery, N.Exists, N.ScalarSubquery, N.Sample))
+                for x in walk([common0, exprs])):
             return None
 
         b = self.gen_rel(common0)
@@ -1681,7 +1666,7 @@ class SqlGenerator:
             if self.ctx.prober is None:
                 raise CompileError("pivot without IN values requires a value prober")
             probe_sql = f"SELECT DISTINCT {pivot_sql} AS v FROM {b.source} ORDER BY v LIMIT 1000"
-            values = [N.Literal(v, _literal_kind(v)) for v in self.ctx.prober(probe_sql)]
+            values = [literal_of(v) for v in self.ctx.prober(probe_sql)]
         agg_items = rel.agg_items or [N.NamedExpr(N.MethodCall(N.Underscore(), "count"), None)]
         group_by = rel.group_by
         if getattr(rel, "group_all_others", False):
@@ -1691,10 +1676,12 @@ class SqlGenerator:
             if b.columns is None:
                 raise CompileError(
                     "pivot group by * requires known input columns")
-            used: set[str] = set()
-            _collect_expr_idents(rel.pivot_col, used)
-            for it in agg_items:
-                _collect_expr_idents(it.expr, used)
+            from wvlet_spark.analyzer import not_alias_ref, walk
+
+            used = {x.name.lower() for x in walk(
+                        [rel.pivot_col] + [it.expr for it in agg_items],
+                        not_alias_ref)
+                    if isinstance(x, (N.Ident, N.Ref))}
             group_by = [N.NamedExpr(N.Ident(c), None)
                         for c in b.columns if c.lower() not in used]
         sel: list[str] = []
@@ -2910,55 +2897,6 @@ class SqlGenerator:
             sql += " NULLS LAST"
         return sql
 
-    def _contains_agg(self, e: N.Expr) -> bool:
-        found = False
-
-        def walk(x):
-            nonlocal found
-            if found or x is None:
-                return
-            if isinstance(x, N.FunctionApply):
-                if x.name.lower() in AGG_FUNCS and x.window is None:
-                    found = True
-                    return
-                for a in x.args:
-                    walk(a)
-            elif isinstance(x, N.MethodCall):
-                if x.method.lower() in AGG_FUNCS and x.window is None:
-                    found = True
-                    return
-                walk(x.target)
-                for a in x.args:
-                    walk(a)
-            elif isinstance(x, (N.ArithmeticOp, N.Comparison)):
-                walk(x.left)
-                walk(x.right)
-            elif isinstance(x, (N.And, N.Or)):
-                walk(x.left)
-                walk(x.right)
-            elif isinstance(x, N.Not):
-                walk(x.expr)
-            elif isinstance(x, N.UnaryOp):
-                walk(x.expr)
-            elif isinstance(x, N.Cast):
-                walk(x.expr)
-            elif isinstance(x, N.IfExpr):
-                walk(x.cond)
-                walk(x.then)
-                walk(x.otherwise)
-            elif isinstance(x, N.CaseExpr):
-                for c, v in x.whens:
-                    walk(c)
-                    walk(v)
-                walk(x.otherwise)
-            elif isinstance(x, N.Between):
-                walk(x.expr)
-                walk(x.lower)
-                walk(x.upper)
-
-        walk(e)
-        return found
-
 
 _RESERVED = {
     "select", "from", "where", "group", "order", "by", "limit", "join", "left",
@@ -2999,29 +2937,6 @@ def _spark_slice_robust(a: str, lo: str, hi: str, step: str) -> str:
             f" __i -> element_at({a}, __i)) end)")
 
 
-def _collect_expr_idents(e, out: set) -> None:
-    """Lowercased names of every column an expression references — bare
-    Idents plus the tail of alias-qualified Refs (pivot `group by *`
-    uses this to exclude referenced columns from the implicit keys)."""
-    import dataclasses
-
-    if isinstance(e, N.Ident):
-        out.add(e.name.lower())
-        return
-    if isinstance(e, N.Ref):
-        out.add(e.name.lower())
-        if not isinstance(e.qualifier, N.Ident):
-            _collect_expr_idents(e.qualifier, out)
-        return
-    if dataclasses.is_dataclass(e) and not isinstance(e, type):
-        for f in dataclasses.fields(e):
-            _collect_expr_idents(getattr(e, f.name), out)
-        return
-    if isinstance(e, (list, tuple)):
-        for x in e:
-            _collect_expr_idents(x, out)
-
-
 def _block_dirty(b: "SqlGenerator.Block") -> bool:
     return (
         b.select is not None
@@ -3051,36 +2966,6 @@ def _relation_alias(rel: N.Relation) -> str | None:
     return None
 
 
-def _references_alias(e: N.Expr, alias: str) -> bool:
-    found = False
-
-    def walk(x):
-        nonlocal found
-        if found or x is None:
-            return
-        if isinstance(x, N.Ref):
-            q = x.qualifier
-            if isinstance(q, N.Ident) and q.name == alias:
-                found = True
-                return
-            walk(q)
-        elif isinstance(x, N.ArithmeticOp):
-            walk(x.left)
-            walk(x.right)
-        elif isinstance(x, N.Cast):
-            walk(x.expr)
-        elif isinstance(x, N.FunctionApply):
-            for a in x.args:
-                walk(a)
-        elif isinstance(x, N.MethodCall):
-            walk(x.target)
-            for a in x.args:
-                walk(a)
-
-    walk(e)
-    return found
-
-
 def _is_stringy(e: N.Expr) -> bool:
     if isinstance(e, N.Literal) and e.kind == "string":
         return True
@@ -3091,13 +2976,15 @@ def _is_stringy(e: N.Expr) -> bool:
     return False
 
 
-def _literal_kind(v) -> str:
+def literal_of(v) -> N.Literal:
+    """Python value -> Literal node (bound parameters, probed pivot
+    values); values of any other type become their string form."""
     if v is None:
-        return "null"
+        return N.Literal(None, "null")
     if isinstance(v, bool):
-        return "bool"
+        return N.Literal(v, "bool")
     if isinstance(v, int):
-        return "int"
+        return N.Literal(v, "int")
     if isinstance(v, float):
-        return "float"
-    return "string"
+        return N.Literal(v, "float")
+    return N.Literal(str(v), "string")

@@ -33,6 +33,7 @@ import datetime
 from dataclasses import dataclass
 
 from wvlet_spark import nodes as N
+from wvlet_spark.analyzer import not_alias_ref, walk
 from wvlet_spark.stats import TableStats, _to_comparable
 
 DEFAULT_EQ_SEL = 0.1
@@ -99,32 +100,6 @@ def _literal_value(e: N.Expr):
         except ValueError:
             return v
     return v
-
-
-def _collect_cols(e, out: list) -> bool:
-    """All column references in e -> out; False when e contains a subquery
-    (which may reference relations outside the chain)."""
-    if isinstance(e, (N.InSubquery, N.Exists, N.ScalarSubquery, N.Relation)):
-        return False
-    col = _as_column(e) if isinstance(e, (N.Ident, N.Ref)) else None
-    if col is not None:
-        out.append(col)
-        return True
-    if isinstance(e, N.Ref):
-        # qualifier is itself an expression (struct access) — record nothing,
-        # recurse into the qualifier for safety
-        return _collect_cols(e.qualifier, out)
-    if dataclasses.is_dataclass(e) and not isinstance(e, type):
-        for f in dataclasses.fields(e):
-            if not _collect_cols(getattr(e, f.name), out):
-                return False
-        return True
-    if isinstance(e, (list, tuple)):
-        for x in e:
-            if not _collect_cols(x, out):
-                return False
-        return True
-    return True
 
 
 # ------------------------------------------------------------- chain model
@@ -527,8 +502,18 @@ def _try_reorder(node: N.Relation, schema_of, stats_of,
     edges: list[tuple[int, str, int, str]] = []
     col_expr: dict[tuple[int, str], N.Expr] = {}
     for c in conjuncts:
+        # column refs up to the first subquery, which may reference
+        # relations outside the chain (clean=False: residual only)
         cols: list = []
-        clean = _collect_cols(c, cols)
+        clean = True
+        for x in walk(c, not_alias_ref):
+            if isinstance(x, (N.InSubquery, N.Exists, N.ScalarSubquery,
+                              N.Relation)):
+                clean = False
+                break
+            col = _as_column(x) if isinstance(x, (N.Ident, N.Ref)) else None
+            if col is not None:
+                cols.append(col)
         owners = set()
         for col in cols:
             o = _owner(col, leaves)
@@ -536,7 +521,7 @@ def _try_reorder(node: N.Relation, schema_of, stats_of,
                 return node
             owners.add(o)
         if not clean:
-            continue                       # subquery conjunct: residual only
+            continue
         if len(owners) == 1:
             local.setdefault(next(iter(owners)), []).append(c)
         elif len(owners) == 2 and isinstance(c, N.Comparison) and c.op == "=":

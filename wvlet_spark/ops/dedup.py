@@ -69,40 +69,29 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
                        num_hashes: int = 64, shingle_k: int = 5,
                        impl: str = "fast") -> DataFrame:
     """MinHash signature per document: sig[j] = min over word-shingles of
-    the j-th affine permutation of the shingle hash.  Map-only; the
-    signature is num_hashes longs.  Both impls share the same hash family
-    (crc32-compatible 31-bit reduction, affine permutations mod 2^31-1).
+    the j-th affine permutation (mod 2^31-1) of the shingle hash.
+    Map-only; the signature is num_hashes longs.
 
-    impl='pandas' (default): vectorized numpy inside an Arrow-batched
-    pandas UDF — one (num_hashes x n_shingles) matrix min per doc.
-    Measured ~12x faster than the JVM expression at sf0.1 because nested
-    higher-order functions evaluate interpreted, per element.
+    impl='fast' (default): hash each word ONCE (pandas.util.hash_array,
+    cython murmur over the whole Arrow batch), then combine the word
+    hashes into shingle hashes with a k-term strided polynomial in numpy.
+    No per-shingle Python string is built: building and encoding k-word
+    shingle strings in Python measured ~10x slower at sf1.
 
-    impl='expr': pure JVM expressions, zero Python workers.  The shape is
-    load-bearing: F.aggregate's *input* argument evaluates exactly once
-    per row, so shingle strings are built+hashed once; putting the shingle
-    expression inside a per-j lambda (or behind a projection alias, which
-    CollapseProject inlines right back) re-builds every shingle string
-    num_hashes times — measured ~40x slower end-to-end.
+    impl='portable': md5-60bit shingle hashes that DuckDB can recompute
+    exactly, so pipelines built on it have an independent oracle (see
+    _minhash_signatures_portable).
 
-    impl='fast' (default): fully vectorized — hash each word ONCE
-    (pandas.util.hash_array, cython murmur over the whole Arrow batch),
-    then combine word hashes into shingle hashes with a k-term strided
-    polynomial in numpy.  Equivalent hash-family quality (deterministic,
-    uniform), but no per-shingle Python string building: the 'pandas'
-    impl spends its time constructing+encoding k-word shingle strings
-    (k-fold data amplification in the Python loop) — measured ~10x
-    slower than 'fast' at sf1.  Different family than 'pandas'/'expr',
-    so borderline pairs can differ between impls."""
+    The two use different hash families, so borderline pairs can differ
+    between them.  Any other impl raises ValueError."""
+    if impl not in ("fast", "portable"):
+        raise ValueError(f"minhash_signatures: unknown impl {impl!r} "
+                         "(expected 'fast' or 'portable')")
     from wvlet_spark.ops.util import ensure_map_parallelism
     df = ensure_map_parallelism(df)
     if impl == "fast":
         return _minhash_signatures_fast(df, text_col, id_col, num_hashes, shingle_k)
-    if impl == "pandas":
-        return _minhash_signatures_pandas(df, text_col, id_col, num_hashes, shingle_k)
-    if impl == "portable":
-        return _minhash_signatures_portable(df, text_col, id_col, num_hashes, shingle_k)
-    return _minhash_signatures_expr(df, text_col, id_col, num_hashes, shingle_k)
+    return _minhash_signatures_portable(df, text_col, id_col, num_hashes, shingle_k)
 
 
 def _minhash_signatures_fast(df: DataFrame, text_col: str, id_col: str,
@@ -141,65 +130,13 @@ def _minhash_signatures_fast(df: DataFrame, text_col: str, id_col: str,
             else:
                 h = (wh * C[:n]).sum(keepdims=True) % p if n else \
                     np.zeros(1, dtype=np.uint64)
+            # the final mod p is load-bearing: without it a*h+b is
+            # monotone in h and every "permutation" picks the same shingle
             sig = ((A * h[None, :] + B) % p).min(axis=1)
             out.append(sig.astype(np.int64))
         return pd.Series(out)
 
     return df.select(F.col(id_col), mh_sig(text_col).alias("minhash"))
-
-
-def _minhash_signatures_pandas(df: DataFrame, text_col: str, id_col: str,
-                               num_hashes: int, shingle_k: int) -> DataFrame:
-    from pyspark.sql.types import ArrayType, LongType
-
-    a_co, b_co = _mh_coeffs(num_hashes)
-    p = np.uint64(_MH_P)
-    A = np.array(a_co, dtype=np.uint64)
-    B = np.array(b_co, dtype=np.uint64)
-    k = shingle_k
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def mh_sig(texts: pd.Series) -> pd.Series:
-        import zlib
-        out = []
-        for t in texts:
-            words = (t or "").lower().split()
-            if len(words) >= k:
-                shingles = [" ".join(words[i:i + k]) for i in range(len(words) - k + 1)]
-            else:
-                shingles = [" ".join(words)]
-            h = np.array([zlib.crc32(s.encode()) for s in shingles], dtype=np.uint64) % p
-            # final mod p is load-bearing: without it a*h+b is monotone in h
-            # and every "permutation" would select the same min shingle
-            sig = ((A[:, None] * h[None, :] + B[:, None]) % p).min(axis=1)
-            out.append(sig.astype(np.int64))
-        return pd.Series(out)
-
-    return df.select(F.col(id_col), mh_sig(text_col).alias("minhash"))
-
-
-def _minhash_signatures_expr(df: DataFrame, text_col: str, id_col: str,
-                             num_hashes: int, shingle_k: int) -> DataFrame:
-    sh = _shingles(text_col, shingle_k)
-    # crc32-compatible base hash so both impls agree: crc32 of the shingle
-    sh_hashed = F.transform(sh, lambda s: F.crc32(F.encode(s, "UTF-8")))
-    max_long = (1 << 63) - 1
-    a_co, b_co = _mh_coeffs(num_hashes)
-    # products stay < 2^62: no ANSI-mode long overflow
-    sig = F.aggregate(
-        sh_hashed,
-        F.array_repeat(F.lit(max_long).cast("long"), num_hashes),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(*[
-                # trailing mod p is load-bearing (see pandas impl)
-                F.pmod(F.pmod(h, F.lit(_MH_P)) * F.lit(a) + F.lit(b), F.lit(_MH_P))
-                for a, b in zip(a_co, b_co)
-            ]),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-    return df.select(F.col(id_col), sig.alias("minhash"))
 
 
 def _votes_pack(hs, bits: int) -> pd.Series:
@@ -259,11 +196,10 @@ def _md5_60bit(col):
 
 def _minhash_signatures_portable(df: DataFrame, text_col: str, id_col: str,
                                  num_hashes: int, shingle_k: int) -> DataFrame:
-    """Same affine-permutation minhash as _minhash_signatures_expr but the
-    base shingle hash is md5-60bit (ANSI-SQL-derivable) instead of crc32 —
-    every value can be recomputed by DuckDB, so the LSH pipeline built on
-    it gets a full independent oracle (ops/registry.py
-    _minhash_portable_oracle).  Map-only.  The UDF takes the plain token
+    """Affine-permutation minhash over an md5-60bit shingle hash
+    (ANSI-SQL-derivable) — every value can be recomputed by DuckDB, so
+    the LSH pipeline built on it gets a full independent oracle
+    (ops/registry.py _minhash_portable_oracle).  Map-only.  The UDF takes the plain token
     array and builds shingles + md5-60bit + affine-permutation mins in
     Python — ' '.join over token windows is byte-identical to the SQL
     concat_ws(' ', slice(w, i, k)) form (null text mirrors the JVM

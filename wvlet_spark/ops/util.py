@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -11,11 +10,10 @@ from pyspark.sql import DataFrame
 # (ensure_map_parallelism).  1 MB of (compressed, footer-estimated) input
 # per task keeps toy-scale graded runs from paying 32 task launches for
 # 5 k rows; production note: on a real cluster inputs arrive well-split
-# and the guard is a no-op, so this knob only shapes small-input runs.
-_MAP_TASK_MB = float(os.environ.get("SPARK_GRAFT_MAP_TASK_MB", "1"))
+# and the guard is a no-op, so this only shapes small-input runs.
+_MAP_TASK_MB = 1
 
-# (application id, semantic plan hash) -> (scan partition count,
-# footer-estimated plan bytes).  The probe
+# (application id, semantic plan hash) -> scan partition count.  The probe
 # that fills this (plan -> RDD conversion) costs a driver round-trip +
 # physical planning, so it runs at most once per distinct plan per
 # application; repeated ext-op invocations hit the cache via semanticHash
@@ -64,8 +62,7 @@ def probe_vector_dim(df: DataFrame, vec_col: str) -> int:
 # single job.  Above the threshold the measured round-6 behavior holds
 # (lazy candidate lineage re-ran a 5 M-doc banded self-join: verify 147 s
 # lazy vs 12 s materialized, SCALE.md §29) so checkpoints stay ON.
-_MATERIALIZE_MIN_MB = float(
-    os.environ.get("SPARK_GRAFT_MATERIALIZE_MIN_MB", "32"))
+_MATERIALIZE_MIN_MB = 32
 
 _PLAN_BYTES_CACHE: "OrderedDict[tuple[str, int], int | None]" = OrderedDict()
 
@@ -199,7 +196,7 @@ def ensure_map_parallelism(df: DataFrame, min_fraction: float = 2.0,
 
     The repartition WIDTH is data-derived, not a constant (round-9, guide
     §2 "make partitioning scale-adaptive"): one task per
-    $SPARK_GRAFT_MAP_TASK_MB (default 1 MB) of the plan's estimated input
+    _MAP_TASK_MB (1 MB) of the plan's footer-estimated input
     bytes, capped at defaultParallelism.  A 17 MB toy input no longer
     fans a 5 k-row map into 32 near-empty tasks (per-task launch overhead
     dominated every sub-second op in the round-9 sweep), while anything
@@ -220,22 +217,16 @@ def ensure_map_parallelism(df: DataFrame, min_fraction: float = 2.0,
     cap = sc.defaultParallelism
     try:
         key = (sc.applicationId, df.semanticHash())
-        cached = _NPARTS_CACHE.get(key)
-        if cached is None:
-            nparts = df.rdd.getNumPartitions()
-            try:
-                est_bytes = int(df._jdf.queryExecution().optimizedPlan()
-                                .stats().sizeInBytes())
-            except Exception:
-                est_bytes = None
-            _NPARTS_CACHE[key] = (nparts, est_bytes)
+        nparts = _NPARTS_CACHE.get(key)
+        if nparts is None:
+            nparts = _NPARTS_CACHE[key] = df.rdd.getNumPartitions()
             while len(_NPARTS_CACHE) > _NPARTS_CACHE_MAX:
                 _NPARTS_CACHE.popitem(last=False)
         else:
             _NPARTS_CACHE.move_to_end(key)
-            nparts, est_bytes = cached
     except Exception:
         return df
+    est_bytes = plan_estimated_bytes(df)
     target = cap
     if not wide and est_bytes is not None and est_bytes >= 0:
         per_task = max(1, int(_MAP_TASK_MB * 1024 * 1024))

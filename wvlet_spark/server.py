@@ -156,8 +156,9 @@ class WvletServer:
     def execute_request(self, req: dict) -> dict:
         from wvlet_spark.selector import select_text
 
-        self._n += 1
-        qid = f"q_{self._n:06d}"
+        with self._hist_lock:
+            self._n += 1
+            qid = f"q_{self._n:06d}"
         text = req.get("query", "")
         mode = req.get("querySelection", "subquery")
         line = req.get("line")

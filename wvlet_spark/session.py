@@ -32,8 +32,9 @@ import re
 import threading
 
 from wvlet_spark import nodes as N
-from wvlet_spark.analyzer import Analyzer, transform, walk
-from wvlet_spark.generator import DUCKDB, SPARK, CompileError, GenContext, SqlGenerator
+from wvlet_spark.analyzer import Analyzer, substitute_idents, transform, walk
+from wvlet_spark.generator import (DUCKDB, SPARK, CompileError, GenContext,
+                                   SqlGenerator, literal_of)
 from wvlet_spark.parser import Parser, _SaveMarker
 
 
@@ -938,7 +939,8 @@ class WvletSession:
         substituted for same-named identifiers (params shadow columns,
         matching the reference's model-arg binding)."""
         if params:
-            rel = _substitute_idents(rel, params)
+            rel = substitute_idents(
+                rel, {k: literal_of(v) for k, v in params.items()})
         return self.sql_df(rel)
 
     def sql_df(self, rel: N.Relation, params=None):
@@ -1132,8 +1134,7 @@ class WvletSession:
         if node.kind == "input":
             seen: list[tuple[int, str]] = []
             order: dict[str, int] = {}
-
-            def collect(n):
+            for n in walk(mdl.body):
                 if isinstance(n, N.Param):
                     key = n.name if n.kind == "name" else str(n.index)
                     if key not in order:
@@ -1141,9 +1142,6 @@ class WvletSession:
                             and n.index else len(order) + 1
                         order[key] = pos
                         seen.append((pos, "unknown"))
-                return n
-
-            transform(mdl.body, expr_fn=collect)
             for i, (pname, ptype, _d) in enumerate(mdl.params or []):
                 seen.append((i + 1, ptype or "unknown"))
             df = self.spark.createDataFrame(sorted(set(seen)),
@@ -1165,15 +1163,7 @@ class WvletSession:
         return N.TableRef(self._stage_view(df, "desc"))
 
     def _run_debugs(self, rel: N.Relation) -> None:
-        debugs: list[N.Debug] = []
-
-        def rel_fn(node):
-            if isinstance(node, N.Debug):
-                debugs.append(node)
-            return node
-
-        transform(rel, rel_fn=rel_fn)
-        for d in debugs:
+        for d in _debugs(rel):
             body = d.body if d.body is not None else d.child
             try:
                 from wvlet_spark.parser import _HoleRelation
@@ -1380,6 +1370,15 @@ def _tree_contains(rel, types: tuple) -> bool:
     return any(isinstance(n, types) for n in walk(rel))
 
 
+def _debugs(rel):
+    """The debug nodes under `rel` in the order their side-channels run:
+    innermost first, as a bottom-up rewrite would meet them."""
+    for n in walk(rel, lambda x: not isinstance(x, N.Debug)):
+        if isinstance(n, N.Debug):
+            yield from _debugs([n.child, n.body])
+            yield n
+
+
 def _json_key_order(path: str) -> list[str] | None:
     """First record's key order from a local JSON/JSONL file (None if the
     path isn't a readable local file — remote files keep Spark's order)."""
@@ -1411,18 +1410,6 @@ def _json_key_order(path: str) -> list[str] | None:
 def _bind_prepared_params(rel: N.Relation, params: list | tuple | dict):
     """Replace Param nodes with literal values: `?`/`$1` bind positionally
     from a list/tuple (1-origin), `$name` from a dict."""
-    from wvlet_spark.analyzer import transform
-
-    def lit(v):
-        if v is None:
-            return N.Literal(None, "null")
-        if isinstance(v, bool):
-            return N.Literal(v, "bool")
-        if isinstance(v, int):
-            return N.Literal(v, "int")
-        if isinstance(v, float):
-            return N.Literal(v, "float")
-        return N.Literal(str(v), "string")
 
     def expr_fn(node):
         if not isinstance(node, N.Param):
@@ -1430,45 +1417,17 @@ def _bind_prepared_params(rel: N.Relation, params: list | tuple | dict):
         if node.kind == "name":
             if not isinstance(params, dict) or node.name not in params:
                 raise CompileError(f"missing value for parameter ${node.name}")
-            return lit(params[node.name])
+            return literal_of(params[node.name])
         if isinstance(params, dict):
             if node.index in params:
-                return lit(params[node.index])
+                return literal_of(params[node.index])
             raise CompileError(f"missing value for parameter #{node.index}")
         if 1 <= node.index <= len(params):
-            return lit(params[node.index - 1])
+            return literal_of(params[node.index - 1])
         raise CompileError(f"missing value for parameter #{node.index} "
                            f"(got {len(params)} values)")
 
     return transform(rel, expr_fn=expr_fn)
-
-
-def _substitute_idents(rel: N.Relation, params: dict):
-    """Deep-copy rewrite replacing Ident(name) with a literal for every
-    bound parameter name."""
-    import copy
-
-    def lit(v):
-        kind = ("null" if v is None else "int" if isinstance(v, bool) is False
-                and isinstance(v, int) else "float" if isinstance(v, float)
-                else "string")
-        return N.Literal(v, kind)
-
-    def walk(node):
-        if isinstance(node, N.Ident) and node.name in params:
-            return lit(params[node.name])
-        if node is None or not hasattr(node, "__dataclass_fields__"):
-            return node
-        node = copy.copy(node)
-        for f in node.__dataclass_fields__:
-            v = getattr(node, f)
-            if isinstance(v, list):
-                setattr(node, f, [walk(i) if hasattr(i, "__dataclass_fields__") else i for i in v])
-            elif hasattr(v, "__dataclass_fields__"):
-                setattr(node, f, walk(v))
-        return node
-
-    return walk(rel)
 
 
 def compile_to_sql(text: str, dialect: str = SPARK) -> str:
